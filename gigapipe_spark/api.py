@@ -34,7 +34,7 @@ facade level).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,10 +100,13 @@ def _find_range_ns(query: str) -> int | None:
 
 @dataclass
 class Engine:
-    """One engine per (session, store dir) — contexts cache the derived
-    views (samples/series/GIN/spans/attrs), so repeated endpoint calls
-    reuse the same cached dimension tables exactly like the reference's
-    stored MVs."""
+    """One engine per (session, store dir). Its three query contexts
+    hold tables only (series/GIN/metrics/spans/attrs, memoized like the
+    reference's stored MVs), so repeated endpoint calls reuse them.
+    Per-request state — the time window, the TraceQL complexity probe —
+    lives on the request-local copy each compile entry point makes, so
+    concurrent requests share the contexts without seeing each other's
+    windows or probes."""
 
     spark: SparkSession
     sf_dir: str
@@ -409,17 +412,15 @@ class Engine:
     ) -> DataFrame:
         """/api/v1/query_range (ref: router/prometheus_query_range.go).
 
-        `step_ns` overrides the evaluation grid (a fresh context — the
-        default-step context and its cached views are untouched);
-        start/end bound the result window like the endpoint's params."""
-        if step_ns is not None and step_ns != self.prom_step_ns:
-            ctx = PromQLContext(self.spark, self.sf_dir, step_ns=step_ns)
-        else:
-            ctx = self.promctx()
-        # request window → widened raw scan bound below the aggs
-        # (ctx.set_scan_bounds inside _promql_query), exact trim here
-        ctx.start_ns, ctx.end_ns = start_ns, end_ns
-        m = _promql_query(ctx, expr)
+        `step_ns` overrides the evaluation grid (a copy of the engine's
+        context that shares its tables); start/end bound the result
+        window like the endpoint's params."""
+        ctx = self.promctx()
+        if step_ns is not None:
+            ctx = replace(ctx, step_ns=step_ns)
+        # request window → widened raw scan bound below the aggs, exact
+        # trim here
+        m = _promql_query(ctx, expr, start_ns, end_ns)
         if start_ns is not None:
             m = m.filter(F.col("timestamp_ns") >= start_ns)
         if end_ns is not None:
@@ -429,9 +430,7 @@ class Engine:
     def prom_query(self, expr: str, time_ns: int | None = None) -> DataFrame:
         """/api/v1/query — instant vector: latest step at/before the
         evaluation time, per series."""
-        ctx = self.promctx()
-        ctx.start_ns, ctx.end_ns = None, None  # shared ctx: drop stale window
-        m = _promql_query(ctx, expr)
+        m = _promql_query(self.promctx(), expr)
         if time_ns is not None:
             m = m.filter(F.col("timestamp_ns") <= time_ns)
         group_cols = [c for c in m.columns if c not in ("timestamp_ns", "value")]

@@ -33,7 +33,7 @@ labels — but stays a distributed DataFrame throughout.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -52,47 +52,47 @@ from gigapipe_spark.sources import views
 
 
 @dataclass
-class LogQLContext:
+class LogQLContext(views.TableMemo):
     """Bind-point for the engine's tables; override in tests to inject
-    custom DataFrames."""
+    custom DataFrames. The engine's context holds tables only; the
+    request window lives on the copy query() makes."""
 
     spark: SparkSession
     sf_dir: str
-    # requested time window (query_range params); query() widens these by
-    # the query's max range+offset and threads them into the fact scan as
-    # raw-ts predicates (parquet row-group pruning at scale — ref:
-    # stream_select.go:76, prom_queryable.go:196-202)
+    # request window (query_range params) and the query's max
+    # range+offset, set only on query()'s request copy: the widened
+    # window reaches the fact scan as raw-ts predicates (parquet
+    # row-group pruning at scale — ref: stream_select.go:76,
+    # prom_queryable.go:196-202)
     start_ns: int | None = None
     end_ns: int | None = None
-    _scan_bounds: tuple[int | None, int | None] = (None, None)
-    _samples: DataFrame | None = None
-    _series: DataFrame | None = None
-    _gin: DataFrame | None = None
+    lookback_ns: int = 0
+
+    @property
+    def scan_bounds(self) -> tuple[int | None, int | None]:
+        lo = None if self.start_ns is None else self.start_ns - self.lookback_ns
+        return lo, self.end_ns
 
     def samples(self) -> DataFrame:
-        if self._samples is None:
-            self._samples = views.samples(
-                self.spark, self.sf_dir, self._scan_bounds[0], self._scan_bounds[1]
-            )
-        return self._samples
+        """The fact scan under this request's widened window. One memo
+        entry: requests with the same window reuse it, a new window
+        replaces it."""
+        bounds = self.scan_bounds
+        hit = self._tables.get("samples")
+        if hit is None or hit[0] != bounds:
+            hit = self._tables["samples"] = (bounds, self._bounded_samples(*bounds))
+        return hit[1]
 
-    def set_scan_bounds(self, lookback_ns: int) -> None:
-        """Install the widened scan window for the current query."""
-        lo = None if self.start_ns is None else self.start_ns - lookback_ns
-        hi = self.end_ns
-        if (lo, hi) != self._scan_bounds:
-            self._scan_bounds = (lo, hi)
-            self._samples = None
+    def _bounded_samples(self, lo: int | None, hi: int | None) -> DataFrame:
+        return views.samples(self.spark, self.sf_dir, lo, hi)
 
     def series(self) -> DataFrame:
-        if self._series is None:
-            self._series = views.time_series(self.spark, self.sf_dir)
-        return self._series
+        return self._table("series", lambda: views.time_series(self.spark, self.sf_dir))
 
     def gin(self) -> DataFrame:
-        if self._gin is None:
-            self._gin = views.time_series_gin(self.spark, self.sf_dir)
-        return self._gin
+        return self._table(
+            "gin", lambda: views.time_series_gin(self.spark, self.sf_dir)
+        )
 
     def match_series(self) -> DataFrame:
         """Series dim used for selector matching: one row per
@@ -1380,22 +1380,31 @@ def _cancel_json_logfmt(expr: A.Expr) -> None:
             i -= 1
 
 
-def query(ctx: LogQLContext, text: str) -> Result:
+def query(
+    ctx: LogQLContext,
+    text: str,
+    start_ns: int | None = None,
+    end_ns: int | None = None,
+) -> Result:
     """Compile entry: macros expand first, then planner plugins are
     consulted, then the built-in compiler (ref: planner.go:134-139 —
-    plugin chain before the stock planner; model.go:485 MacrosOp)."""
+    plugin chain before the stock planner; model.go:485 MacrosOp).
+
+    The plan is compiled on a request-local copy of `ctx` carrying the
+    window [start_ns, end_ns); `ctx` itself is never written, so one
+    engine context serves concurrent requests."""
     from gigapipe_spark import plugins
     from gigapipe_spark.logql.parser import parse
 
     if "_" in text and plugins.get_plugins(plugins.MACRO):
         text = plugins.expand_macros(text)
+    ctx = replace(ctx, start_ns=start_ns, end_ns=end_ns)
     planned = plugins.consult(plugins.LOGQL_PLANNER, ctx, text)
     if planned is not None:
         return planned
     expr = parse(text)
     _cancel_json_logfmt(expr)
-    ctx.set_scan_bounds(_max_lookback_ns(expr))
-    return compile_expr(ctx, expr)
+    return compile_expr(replace(ctx, lookback_ns=_max_lookback_ns(expr)), expr)
 
 
 def _max_lookback_ns(expr) -> int:
@@ -1444,8 +1453,7 @@ def query_range(
     newest/oldest-first ordering, row limit. The limit's tiebreak is the
     (timestamp, fingerprint) total order so pagination is deterministic.
     """
-    ctx.start_ns, ctx.end_ns = start_ns, end_ns
-    res = query(ctx, text)
+    res = query(ctx, text, start_ns, end_ns)
     df = res.df
     # exact trim on the derived column; the widened raw-ts bound already
     # pruned the scan inside query()

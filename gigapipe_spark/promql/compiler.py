@@ -21,7 +21,7 @@ AQE handles skewed series.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -49,41 +49,34 @@ ROLLUP_NS = 15_000_000_000
 
 
 @dataclass
-class PromQLContext:
+class PromQLContext(views.TableMemo):
     spark: SparkSession
     sf_dir: str
     step_ns: int = 60_000_000_000  # evaluation step grid
     use_rollup: bool = True  # allow the downsample shortcut
-    # requested window (query_range params); query() widens by the max
-    # range+offset+staleness lookback and every selector scan applies the
-    # result as a raw timestamp_ns bound BELOW all aggs/windows (ref:
+    # request window (query_range params) and the max
+    # range+offset+staleness lookback, set only on query()'s request
+    # copy: every selector scan applies the widened window as a raw
+    # timestamp_ns bound BELOW all aggs/windows (ref:
     # prom_queryable.go:196-202 rate-hint widening). On a stored metrics
     # table this predicate reaches the parquet scan; on the derived
     # fixture it stops above the counter cumsum, which needs history.
     start_ns: int | None = None
     end_ns: int | None = None
-    _scan_bounds: tuple = (None, None)
-    _metrics: DataFrame | None = None
-    _rollup: DataFrame | None = None
-    _logctx: LogQLContext | None = None
-
-    def set_scan_bounds(self, lookback_ns: int) -> None:
-        lo = None if self.start_ns is None else self.start_ns - lookback_ns
-        self._scan_bounds = (lo, self.end_ns)
+    lookback_ns: int = 0
 
     def bound_scan(self, df: DataFrame) -> DataFrame:
         """Apply the widened raw time window to a per-series scan."""
-        lo, hi = self._scan_bounds
-        if lo is not None:
-            df = df.filter(F.col("timestamp_ns") >= lo)
-        if hi is not None:
-            df = df.filter(F.col("timestamp_ns") < hi)
+        if self.start_ns is not None:
+            df = df.filter(F.col("timestamp_ns") >= self.start_ns - self.lookback_ns)
+        if self.end_ns is not None:
+            df = df.filter(F.col("timestamp_ns") < self.end_ns)
         return df
 
     def metrics(self) -> DataFrame:
-        if self._metrics is None:
-            self._metrics = views.metric_samples(self.spark, self.sf_dir)
-        return self._metrics
+        return self._table(
+            "metrics", lambda: views.metric_samples(self.spark, self.sf_dir)
+        )
 
     def series(self) -> DataFrame:
         """Series dimension (fingerprint → labels); store-backed
@@ -94,14 +87,12 @@ class PromQLContext:
         """The metrics_15s table (ref: log.sql:83-107). Session-cached
         derived table (views.rollup_15s) standing in for the stored
         rollup parquet a deployment reads."""
-        if self._rollup is None:
-            self._rollup = views.rollup_15s(self.spark, self.sf_dir)
-        return self._rollup
+        return self._table(
+            "rollup", lambda: views.rollup_15s(self.spark, self.sf_dir)
+        )
 
     def logctx(self) -> LogQLContext:
-        if self._logctx is None:
-            self._logctx = LogQLContext(self.spark, self.sf_dir)
-        return self._logctx
+        return self._table("logctx", lambda: LogQLContext(self.spark, self.sf_dir))
 
 
 def _bucket(ts: Column, width_ns: int, offset_ns: int = 0) -> Column:
@@ -236,10 +227,7 @@ def _range_fn_subquery(ctx: PromQLContext, fn: FnCall, sq) -> DataFrame:
     evaluation runs at sq.step_ns."""
     if fn.fn not in _SUBQUERY_FNS:
         raise NotImplementedError(f"{fn.fn} over a subquery")
-    import dataclasses
-
-    inner_ctx = dataclasses.replace(ctx, step_ns=sq.step_ns, _metrics=None, _rollup=None, _logctx=None)
-    inner = compile_expr(inner_ctx, sq.inner)
+    inner = compile_expr(replace(ctx, step_ns=sq.step_ns), sq.inner)
     bucket = _bucket(F.col("timestamp_ns"), sq.range_ns).alias("timestamp_ns")
     if fn.fn in _COUNTER_FNS:
         # counter math over the inner expression's step-grid points —
@@ -1376,8 +1364,18 @@ def _resolve_at_refs(ctx: PromQLContext, e) -> None:
         _resolve_at_refs(ctx, e.right)
 
 
-def query(ctx: PromQLContext, text: str) -> DataFrame:
+def query(
+    ctx: PromQLContext,
+    text: str,
+    start_ns: int | None = None,
+    end_ns: int | None = None,
+) -> DataFrame:
+    """Compile `text` for the window [start_ns, end_ns) on a
+    request-local copy of `ctx`; `ctx` itself is never written, so one
+    engine context serves concurrent requests."""
     expr = P.parse(text)
+    ctx = replace(
+        ctx, start_ns=start_ns, end_ns=end_ns, lookback_ns=_max_lookback_ns(expr)
+    )
     _resolve_at_refs(ctx, expr)
-    ctx.set_scan_bounds(_max_lookback_ns(expr))
     return compile_expr(ctx, expr)

@@ -27,11 +27,33 @@ they are plain column expressions, no UDFs.
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
+
+
+@dataclass
+class TableMemo:
+    """Base of the query contexts: `_table(name, build)` memoizes a
+    table DataFrame in `_tables`. dataclasses.replace copies that dict
+    by reference, so the request-local copy a compile entry point makes
+    and the engine's long-lived context share ONE memo — a table built
+    while serving one request is reused by the next, while the request
+    state on the copy (window, probe) never reaches the shared
+    context. Tests inject tables with `_tables={"name": df}`. Two
+    requests racing on a cold entry may both build it; the builds are
+    equal and the last one stays."""
+
+    _tables: dict = field(default_factory=dict, repr=False, kw_only=True)
+
+    def _table(self, name: str, build):
+        df = self._tables.get(name)
+        if df is None:
+            df = self._tables[name] = build()
+        return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -134,13 +156,7 @@ def metric_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-paid a full fact shuffle + sort + window on EVERY PromQL
     execution (measured r14: the whole-plan floor of
     promql_instant_sum_by). Under the cache-if-fits gate small heaps
-    still stream the plan per query — slower, never fatal.
-
-    GIGAPIPE_NO_METRIC_SAMPLES_CACHE=1 bypasses the cache (plan memo
-    only): the A/B knob for the r14 in-bench datapipe-regression
-    root-cause (VERDICT r15 task 1) — it isolates whether THIS cache's
-    storage-memory footprint is what slows the untouched
-    dedup_minhash_lsh / sim_cosine_topk entries mid-bench."""
+    still stream the plan per query — slower, never fatal."""
 
     def build():
         w = (
@@ -156,12 +172,6 @@ def metric_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(2).cast("byte").alias("type"),
         )
 
-    if os.environ.get("GIGAPIPE_NO_METRIC_SAMPLES_CACHE"):
-        memo = _dim_memo(spark)
-        key = (sf_dir, "metric_samples")
-        if key not in memo:
-            memo[key] = build()  # plan memo, data streams per query
-        return memo[key]
     return _cached(spark, sf_dir, "metric_samples", build, fact=True)
 
 

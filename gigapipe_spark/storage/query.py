@@ -68,7 +68,6 @@ class StoreLogQLContext(LogQLContext):
     """LogQL over the stored samples/time_series/gin tables."""
 
     catalog: Catalog | None = None
-    _match_series: DataFrame | None = None
 
     def match_series(self) -> DataFrame:
         # NO type scoping (the GIN-bitmask matcher this replaces had
@@ -77,43 +76,43 @@ class StoreLogQLContext(LogQLContext):
         # contract fingerprints() broadcasts rely on — labels are
         # identical across a fingerprint's type/version rows by
         # construction (the fingerprint IS the label hash).
-        if self._match_series is None:
-            self._match_series = self.catalog.read_series(
+        return self._table(
+            "match_series",
+            lambda: self.catalog.read_series(
                 self.spark, types=None, per_fingerprint=True
-            ).select("fingerprint", "labels")
-        return self._match_series
+            ).select("fingerprint", "labels"),
+        )
 
-    def samples(self) -> DataFrame:
-        if self._samples is None:
-            df = self.catalog.read(self.spark, "samples")
-            df = _bounded(df, *self._scan_bounds)
-            self._samples = df.filter(F.col("type").isin(0, 1)).select(
-                "fingerprint", "timestamp_ns", "value", "string", "type"
-            )
-        return self._samples
+    def _bounded_samples(self, lo: int | None, hi: int | None) -> DataFrame:
+        df = _bounded(self.catalog.read(self.spark, "samples"), lo, hi)
+        return df.filter(F.col("type").isin(0, 1)).select(
+            "fingerprint", "timestamp_ns", "value", "string", "type"
+        )
 
     def series(self) -> DataFrame:
-        if self._series is None:
-            # planner type scoping (type IN (0,1)) BEFORE the dedup,
-            # then one row per fingerprint for the label join (labels
-            # are identical across a fingerprint's per-type rows)
-            self._series = self.catalog.read_series(
+        # planner type scoping (type IN (0,1)) BEFORE the dedup, then
+        # one row per fingerprint for the label join (labels are
+        # identical across a fingerprint's per-type rows)
+        return self._table(
+            "series",
+            lambda: self.catalog.read_series(
                 self.spark, types=(0, 1), per_fingerprint=True
-            ).select("fingerprint", "labels", "type")
-        return self._series
+            ).select("fingerprint", "labels", "type"),
+        )
 
     def gin(self) -> DataFrame:
-        if self._gin is None:
-            # NO dedup shuffle: every consumer of the GIN is
-            # duplicate-tolerant (bit_or bitmask collapse, semi/anti
-            # joins, distinct on the label endpoints), so cross-date
-            # duplicate (key,val,fp) rows cost nothing — a
-            # dropDuplicates here would shuffle the whole index per
-            # query at scale for no semantic gain
-            self._gin = self.catalog.read(self.spark, "gin").select(
+        # NO dedup shuffle: every consumer of the GIN is
+        # duplicate-tolerant (bit_or bitmask collapse, semi/anti joins,
+        # distinct on the label endpoints), so cross-date duplicate
+        # (key,val,fp) rows cost nothing — a dropDuplicates here would
+        # shuffle the whole index per query at scale for no semantic
+        # gain
+        return self._table(
+            "gin",
+            lambda: self.catalog.read(self.spark, "gin").select(
                 "key", "val", "fingerprint", "type"
-            )
-        return self._gin
+            ),
+        )
 
 
 @dataclass
@@ -125,35 +124,37 @@ class StorePromQLContext(PromQLContext):
     catalog: Catalog | None = None
 
     def metrics(self) -> DataFrame:
-        if self._metrics is None:
-            df = self.catalog.read(self.spark, "samples")
-            self._metrics = df.filter(F.col("type").isin(0, 2)).select(
-                "fingerprint", "timestamp_ns", "value", "string", "type"
-            )
-        return self._metrics
+        return self._table(
+            "metrics",
+            lambda: self.catalog.read(self.spark, "samples")
+            .filter(F.col("type").isin(0, 2))
+            .select("fingerprint", "timestamp_ns", "value", "string", "type"),
+        )
 
     def rollup(self) -> DataFrame:
-        if self._rollup is None:
+        def build():
             import os
 
             if os.path.isdir(self.catalog.path("metrics_15s")):
                 # stored rollup MV, partials merged on read
-                self._rollup = self.catalog.read_rollup(self.spark)
-            else:
-                self._rollup = rollup_15s_batch(self.metrics())
-        return self._rollup
+                return self.catalog.read_rollup(self.spark)
+            return rollup_15s_batch(self.metrics())
+
+        return self._table("rollup", build)
 
     def series(self) -> DataFrame:
-        return self.catalog.read_series(
-            self.spark, types=(0, 2), per_fingerprint=True
-        ).select("fingerprint", "labels", "type")
+        return self._table(
+            "series",
+            lambda: self.catalog.read_series(
+                self.spark, types=(0, 2), per_fingerprint=True
+            ).select("fingerprint", "labels", "type"),
+        )
 
     def logctx(self) -> LogQLContext:
-        if self._logctx is None:
-            self._logctx = StoreLogQLContext(
-                self.spark, self.sf_dir, catalog=self.catalog
-            )
-        return self._logctx
+        return self._table(
+            "logctx",
+            lambda: StoreLogQLContext(self.spark, self.sf_dir, catalog=self.catalog),
+        )
 
 
 def store_logql_context(spark, catalog: Catalog, **kw) -> StoreLogQLContext:
@@ -177,21 +178,21 @@ class StoreTraceQLContext(TraceQLContext):
     gin_is_stored: bool = True
 
     def spans(self) -> DataFrame:
-        if self._spans is None:
-            self._spans = self.catalog.read(self.spark, "tempo_traces").select(
+        return self._table(
+            "spans",
+            lambda: self.catalog.read(self.spark, "tempo_traces").select(
                 "trace_id", "span_id", "parent_id", "name",
                 "timestamp_ns", "duration_ns", "service_name",
-            )
-        return self._spans
+            ),
+        )
 
     def attrs(self) -> DataFrame:
-        if self._attrs is None:
-            self._attrs = self.catalog.read(
-                self.spark, "tempo_traces_attrs_gin"
-            ).select(
+        return self._table(
+            "attrs",
+            lambda: self.catalog.read(self.spark, "tempo_traces_attrs_gin").select(
                 "trace_id", "span_id", "timestamp_ns", "duration", "key", "val"
-            )
-        return self._attrs
+            ),
+        )
 
     def attr_map(self) -> DataFrame:
         # row-oriented twin of the GIN — its own stored table maintained
@@ -280,8 +281,9 @@ class StoreEngine(Engine):
     def refresh(self) -> None:
         """Cross-process read-after-write hook (the reader/writer
         freshness contract — see storage/writer.py "Reader freshness"):
-        drop the memoized query contexts (their DataFrames snapshot the
-        parquet file listing at first action) and invalidate Spark's
+        drop the query contexts — they hold only memoized tables, whose
+        DataFrames snapshot the parquet file listing at first action;
+        no per-request state lives on them — and invalidate Spark's
         cached file listings under the store root, so the NEXT query
         re-lists files and sees appends made by the (flock-enforced
         single) writer process. Same-process pushes call this

@@ -334,14 +334,14 @@ class Tailer:
         from gigapipe_spark.logql.compiler import query as logql_query
 
         ctx = ctx_factory()
-        if self.last_ts_ns:
-            # thread the tail bound through the context so the store
-            # scan prunes raw-ts row groups AND (oid, date) partitions
-            # (StoreLogQLContext._bounded) — a year-deep store must not
-            # be re-scanned per poll (query_range.go:670 re-runs the
-            # transpiled query with the updated from-ts the same way)
-            ctx.start_ns = self.last_ts_ns + 1
-        res = logql_query(ctx, self.query)
+        # the tail bound is the query window, so the store scan prunes
+        # raw-ts row groups AND (oid, date) partitions
+        # (StoreLogQLContext._bounded) — a year-deep store must not be
+        # re-scanned per poll (query_range.go:670 re-runs the transpiled
+        # query with the updated from-ts the same way)
+        res = logql_query(
+            ctx, self.query, self.last_ts_ns + 1 if self.last_ts_ns else None
+        )
         df = res.df
         if "labels" in df.columns and "fingerprint" in df.columns:
             # the compiler prunes the series join for bare selectors;

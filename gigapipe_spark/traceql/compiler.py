@@ -29,7 +29,8 @@ the index entirely and scan the spans table (ref: attrless.go).
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -50,16 +51,13 @@ from gigapipe_spark.traceql.parser import (
 
 
 @dataclass
-class TraceQLContext:
+class TraceQLContext(views.TableMemo):
     spark: SparkSession
     sf_dir: str
     step_ns: int = 3_600_000_000_000  # metrics step (1h default for fixtures)
-    _spans: DataFrame | None = None
-    _attrs: DataFrame | None = None
-    # result of the per-script complexity probe (None = not yet probed);
-    # pending_spanset is set by compile_script so the probe can run
-    # lazily at the first broadcast decision
-    complexity: int | None = None
+    # the spanset being compiled, set only on the request copy a
+    # compile entry point makes; `complexity` probes it lazily at the
+    # first broadcast decision
     pending_spanset: object | None = None
     # whether attrs() is a STORED exploded GIN (key/val predicates are
     # index seeks with parquet pushdown — prefer it for single-term
@@ -70,14 +68,36 @@ class TraceQLContext:
     gin_is_stored: bool = False
 
     def spans(self) -> DataFrame:
-        if self._spans is None:
-            self._spans = views.spans(self.spark, self.sf_dir)
-        return self._spans
+        return self._table("spans", lambda: views.spans(self.spark, self.sf_dir))
 
     def attrs(self) -> DataFrame:
-        if self._attrs is None:
-            self._attrs = views.span_attrs(self.spark, self.sf_dir)
-        return self._attrs
+        return self._table(
+            "attrs", lambda: views.span_attrs(self.spark, self.sf_dir)
+        )
+
+    @cached_property
+    def complexity(self) -> int | None:
+        """The complexity probe of this copy's pending spanset (None
+        without one): run at most once per request copy, and only when
+        a strategy decision asks — plans with no size-sensitive site
+        pay no probe job at all."""
+        if self.pending_spanset is None:
+            return None
+        # session-level memo: dashboards re-issue the same spanset
+        # shapes, and the probe's inputs (the cached dims for one
+        # session+sf) don't change between calls — so the two probe
+        # count JOBS run once per shape, not once per query call.
+        # Store-backed contexts are excluded (their tables grow between
+        # pushes; the probe must re-run against fresh listings).
+        cacheable = type(self).__name__ == "TraceQLContext"
+        memo = _COMPLEXITY_MEMO.setdefault(self.spark, {})
+        key = (self.sf_dir, repr(self.pending_spanset))
+        if cacheable and key in memo:
+            return memo[key]
+        n = eval_complexity(self, self.pending_spanset)
+        if cacheable:
+            memo[key] = n
+        return n
 
     def attr_map(self) -> DataFrame:
         """Per-span attr map layout; store-backed contexts override."""
@@ -422,26 +442,7 @@ def _stats_term_bound(t, stats: dict) -> int | None:
 
 def _probe_bound(ctx: TraceQLContext) -> bool:
     """True when the (lazy, memoized) complexity probe bounds the
-    pending spanset under the broadcast threshold.
-
-    The probe is LAZY: it runs at the first strategy decision, so plans
-    with no size-sensitive site pay no probe job at all."""
-    if ctx.complexity is None and ctx.pending_spanset is not None:
-        # session-level memo: dashboards re-issue the same spanset
-        # shapes, and the probe's inputs (the cached dims for one
-        # session+sf) don't change between calls — so the two probe
-        # count JOBS run once per shape, not once per query call.
-        # Store-backed contexts are excluded (their tables grow between
-        # pushes; the probe must re-run against fresh listings).
-        cacheable = type(ctx).__name__ == "TraceQLContext"
-        memo = _COMPLEXITY_MEMO.setdefault(ctx.spark, {})
-        key = (ctx.sf_dir, repr(ctx.pending_spanset))
-        if cacheable and key in memo:
-            ctx.complexity = memo[key]
-        else:
-            ctx.complexity = eval_complexity(ctx, ctx.pending_spanset)
-            if cacheable:
-                memo[key] = ctx.complexity
+    pending spanset under the broadcast threshold."""
     return ctx.complexity is not None and ctx.complexity <= COMPLEXITY_THRESHOLD
 
 
@@ -524,7 +525,7 @@ def _fused_struct_ids(ctx: TraceQLContext, e) -> DataFrame | None:
     if getattr(e, "op", None) not in ("&>>", "!>>", "<<&", "<<~"):
         return None
     if os.environ.get("GIGAPIPE_NO_STRUCT_FUSION"):
-        return None  # A/B kill switch (same pattern as the cacheprobe knob)
+        return None  # A/B kill switch
     if not (
         _amap_routed_selector(ctx, e.left)
         and _amap_routed_selector(ctx, e.right)
@@ -576,7 +577,12 @@ def _fused_struct_ids(ctx: TraceQLContext, e) -> DataFrame | None:
 
 
 def eval_spanset(ctx: TraceQLContext, e) -> DataFrame:
-    """Spanset expr → DF[trace_id, span_id]."""
+    """Spanset expr → DF[trace_id, span_id], compiled on a request copy
+    of `ctx` whose complexity probe bounds `e`."""
+    return _eval_spanset(replace(ctx, pending_spanset=e), e)
+
+
+def _eval_spanset(ctx: TraceQLContext, e) -> DataFrame:
     if isinstance(e, SpanSelector):
         return select_spans(ctx, e)
     fused = _fused_struct_ids(ctx, e)
@@ -586,13 +592,13 @@ def eval_spanset(ctx: TraceQLContext, e) -> DataFrame:
         # selector + its OWN aggregate filters as one operand
         # (model_v2.go Selector{…, Aggregator}): filter, then shrink
         # back to ids for the enclosing op
-        ids = eval_spanset(ctx, e.spanset)
+        ids = _eval_spanset(ctx, e.spanset)
         spans = ctx.spans().join(ids, ["trace_id", "span_id"], "left_semi")
         return _agg_filter_spans(ctx, spans, e.agg_filters).select(
             "trace_id", "span_id"
         )
-    left = eval_spanset(ctx, e.left)
-    right = eval_spanset(ctx, e.right)
+    left = _eval_spanset(ctx, e.left)
+    right = _eval_spanset(ctx, e.right)
     spans = ctx.spans().select("trace_id", "span_id", "parent_id")
     if e.op in ("and", "or"):
         # trace-level set ops (ref: complex_and.go intersect / complex_or.go
@@ -722,7 +728,7 @@ def compile_script(
         # the explicit baseline window when one was given
         sel, n, baseline = script.compare
         return compare_attrs(ctx, sel, top_n=n, baseline=baseline)
-    ctx.pending_spanset = script.spanset
+    ctx = replace(ctx, pending_spanset=script.spanset)
     if isinstance(script.spanset, SpanSelector) and (
         script.spanset.expr is None
         or all(
@@ -744,7 +750,7 @@ def compile_script(
                 _build_direct_intrinsic(script.spanset.expr)
             )
     else:
-        ids = eval_spanset(ctx, script.spanset)
+        ids = _eval_spanset(ctx, script.spanset)
         if (
             ids_only
             and script.sample is None
@@ -758,8 +764,7 @@ def compile_script(
         # strategy to AQE rather than paying a probe job for this join
         fetch_ids = (
             F.broadcast(ids)
-            if ctx.complexity is not None
-            and ctx.complexity <= COMPLEXITY_THRESHOLD
+            if "complexity" in vars(ctx) and _probe_bound(ctx)
             else ids
         )
         spans = ctx.spans().join(fetch_ids, ["trace_id", "span_id"], "left_semi")
@@ -935,13 +940,11 @@ def metrics_exemplars(
     scale: map-side combine reduces each partition to one candidate row
     per bucket before the exchange.
     """
-    from dataclasses import replace as _dc_replace
-
     m = script.metrics
     if m is None:
         raise ValueError("exemplars need a metrics stage")
     step = m.step_ns or ctx.step_ns
-    bare = _dc_replace(script, metrics=None, topk=None, select_attrs=[])
+    bare = replace(script, metrics=None, topk=None, select_attrs=[])
     spans = compile_script(ctx, bare)
     if start_ns is not None:
         spans = spans.filter(F.col("timestamp_ns") >= start_ns)
@@ -1006,12 +1009,10 @@ def metrics_instant(
     metrics_query.go:143: value = agg over the window; rate divides by
     the window seconds). Without explicit bounds the window is the
     matched spans' extent (derived lazily, no driver action)."""
-    from dataclasses import replace as _dc_replace
-
     m = script.metrics
     if m is None:
         raise ValueError("instant metrics query needs a metrics stage")
-    bare = _dc_replace(script, metrics=None, topk=None, select_attrs=[])
+    bare = replace(script, metrics=None, topk=None, select_attrs=[])
     spans = compile_script(ctx, bare)
     if start_ns is not None:
         spans = spans.filter(F.col("timestamp_ns") >= start_ns)

@@ -1149,6 +1149,30 @@ def test_http_influx_push_end_to_end(gateway):
     assert vals == {"h1": "0.5", "h2": "0.7"}
 
 
+def test_prom_query_range_non_default_step_on_store(gateway):
+    """A non-default query_range step evaluates over the STORE, like
+    the default step: the step's copy of the engine's context keeps
+    the store binding."""
+    base, _ = gateway
+    body = (b"stepcpu,host=s15 usage=0.25 1700000000000000000\n"
+            b"stepcpu,host=s15 usage=0.75 1700000030000000000\n")
+    st, _ = _post_full(base, "/influx/write", body,
+                       {"Content-Type": "text/plain"})
+    assert st == 204
+    q = urllib.parse.quote('usage{host="s15"}')
+    path = f"/api/v1/query_range?query={q}&start=1699999980&end=1700000100"
+    for step in (60, 15):
+        try:
+            st, out = _get(base, f"{path}&step={step}")
+        except urllib.error.HTTPError as e:
+            pytest.fail(f"step={step}: HTTP {e.code} {e.read()[:300]!r}")
+        assert st == 200
+        series = out["data"]["result"]
+        assert [r["metric"]["host"] for r in series] == ["s15"], (step, series)
+        assert {v for _, v in series[0]["values"]} <= {"0.25", "0.75"}
+        assert "0.75" in {v for _, v in series[0]["values"]}, (step, series)
+
+
 def test_stale_listing_error_retries_once(gateway):
     """A rotate/compact can swap parquet files under an in-flight scan;
     the query surface must refresh + re-run ONCE instead of answering

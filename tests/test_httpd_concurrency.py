@@ -7,6 +7,7 @@ tail that stays scoped to its own selector while other pushes fly."""
 from __future__ import annotations
 
 import json
+import sys
 import urllib.parse
 from concurrent.futures import ThreadPoolExecutor
 
@@ -50,12 +51,14 @@ def _push(base: str, app: str, lines: list[tuple[int, str]]) -> int:
     return _post(base, "/loki/api/v1/push", payload)
 
 
-def _query_lines(base: str, app: str) -> list[str]:
+def _query_lines(
+    base: str, app: str, start: int = T0 - 10**9, end: int = T0 + 100 * 10**9
+) -> list[str]:
     q = urllib.parse.quote(f'{{app="{app}"}}')
     status, body = _get(
         base,
-        f"/loki/api/v1/query_range?query={q}&start={T0 - 10**9}"
-        f"&end={T0 + 100 * 10**9}&limit=1000",
+        f"/loki/api/v1/query_range?query={q}&start={start}"
+        f"&end={end}&limit=1000",
     )
     assert status == 200
     out = []
@@ -110,21 +113,41 @@ def test_concurrent_push_query_no_crosstalk(gateway):
 
 
 def test_concurrent_readers_shared_session(gateway):
-    """8 parallel read-only clients over the same engine: identical
-    answers, no errors from the shared context caches."""
+    """Parallel read-only clients over the same engine: every answer
+    equals the same read made serially, and no errors come from the
+    shared context caches. Two inputs: 8 readers of the whole window,
+    and 8 readers of one stream that each ask for their OWN window —
+    the engine's query contexts serve every request, so a window
+    leaking from one request into another drops rows."""
     base, _ = gateway
+    app = "winconc"
+    lines = [(T0 + j * 10**9, f"{app} line {j}") for j in range(4 * N_CLIENTS)]
+    assert _push(base, app, lines) == 204
+    inputs = [(f"conc{i % N_CLIENTS}", None) for i in range(N_CLIENTS)] + [
+        (app, (T0 + 4 * i * 10**9, T0 + (4 * i + 4) * 10**9))
+        for i in range(N_CLIENTS)
+    ]
 
-    def reader(i: int):
-        app = f"conc{i % N_CLIENTS}"
-        lines = _query_lines(base, app)
+    def reader(inp):
+        app, window = inp
+        got = _query_lines(base, app, *window) if window else _query_lines(base, app)
         status, labels = _get(base, "/loki/api/v1/labels")
         assert status == 200
-        return (sorted(lines), sorted(labels["data"]))
+        return (sorted(got), sorted(labels["data"]))
 
-    with ThreadPoolExecutor(max_workers=N_CLIENTS) as pool:
-        first_pass = list(pool.map(reader, range(N_CLIENTS)))
-        second_pass = list(pool.map(reader, range(N_CLIENTS)))
-    assert first_pass == second_pass
+    serial = [reader(inp) for inp in inputs]
+    # each windowed reader sees exactly its own four lines
+    assert [len(s[0]) for s in serial[N_CLIENTS:]] == [4] * N_CLIENTS
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)  # more thread switches inside a request
+    try:
+        with ThreadPoolExecutor(max_workers=N_CLIENTS) as pool:
+            first_pass = list(pool.map(reader, inputs))
+            second_pass = list(pool.map(reader, inputs))
+    finally:
+        sys.setswitchinterval(interval)
+    assert first_pass == serial
+    assert second_pass == serial
 
 
 def test_ws_tail_scoped_under_concurrent_pushes(gateway):

@@ -107,10 +107,13 @@ def test_prom_query_range_bound_below_rate(spark, tmp_path):
     path = str(tmp_path / "stored_metrics")
     views.metric_samples(spark, SF_DIR).limit(1000).write.parquet(path)
     ctx = PromQLContext(
-        spark, SF_DIR, use_rollup=False, _metrics=spark.read.parquet(path)
+        spark, SF_DIR, use_rollup=False,
+        _tables={"metrics": spark.read.parquet(path)},
     )
-    ctx.start_ns, ctx.end_ns = 1_500_000_000_000_000_000, 1_800_000_000_000_000_000
-    m = query(ctx, 'rate({app="click"}[5m])')
+    m = query(
+        ctx, 'rate({app="click"}[5m])',
+        1_500_000_000_000_000_000, 1_800_000_000_000_000_000,
+    )
     plan = _formatted(m)
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pushed and any(
@@ -558,3 +561,31 @@ def test_ingest_decoder_filters_do_not_clone_extraction(spark):
             if line.lstrip().startswith(("Filter", "+- Filter", ":- Filter")):
                 assert "regexp_extract" not in line, line
                 assert "regexp_replace" not in line, line
+
+
+def test_nonpushable_barrier_holds_on_this_spark(spark):
+    """Tripwire for planutil.nonpushable: the barrier relies on Catalyst
+    treating `element_at(shuffle(array(col)), 1)` as non-deterministic
+    and therefore not pushing a filter on it below its projection. A
+    Spark upgrade that folds the shuffle or relaxes the pushdown guard
+    silently turns the barrier back into per-row duplicated work; this
+    test fails loudly instead."""
+    from gigapipe_spark.planutil import nonpushable
+
+    base = spark.range(10)
+    barrier = base.select(nonpushable(F.col("id") * 2).alias("x"))
+    analyzed = barrier._jdf.queryExecution().analyzed()
+    assert not analyzed.projectList().apply(0).deterministic(), (
+        f"nonpushable(col) is deterministic under Spark {spark.version}:"
+        " the push barrier no longer holds"
+    )
+    plan = barrier.filter(F.col("x") > 3)._jdf.queryExecution().optimizedPlan()
+    root, child = plan.toString().splitlines()[:2]
+    assert root.startswith("Filter") and "Project" in child, (
+        f"a filter on nonpushable(col) was pushed below its projection"
+        f" under Spark {spark.version}:\n{plan.toString()}"
+    )
+    # control: the same filter on the bare expression IS pushed down,
+    # so the shape check above can tell the two apart
+    plain = base.select((F.col("id") * 2).alias("x")).filter(F.col("x") > 3)
+    assert plain._jdf.queryExecution().optimizedPlan().toString().startswith("Project")

@@ -75,8 +75,7 @@ def test_at_start_end_refs(spark):
     lo = clicks.agg(F.min("timestamp_ns")).first()[0]
     hi = clicks.agg(F.max("timestamp_ns")).first()[0]
     at_s = hi // 1_000_000_000 + 10  # integer seconds: exact in float
-    ctx.start_ns, ctx.end_ns = lo, at_s * 1_000_000_000
-    pinned_end = query(ctx, '{app="click"} @ end()')
+    pinned_end = query(ctx, '{app="click"} @ end()', lo, at_s * 1_000_000_000)
     explicit = query(
         PromQLContext(spark, SF_DIR), f'{{app="click"}} @ {at_s}'
     )

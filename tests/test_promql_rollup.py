@@ -112,12 +112,8 @@ def test_unaligned_bounds_use_raw(spark):
     end = (lo + (hi - lo) // 2) - (lo + (hi - lo) // 2) % 15_000_000_000 + 7_000_000_000
     assert end % 15_000_000_000 != 0
     for q in ['rate({app="click"}[30m])', 'sum_over_time({app="click"}[30m])']:
-        routed = query(
-            PromQLContext(spark, SF_DIR, use_rollup=True, start_ns=start, end_ns=end), q
-        )
-        raw = query(
-            PromQLContext(spark, SF_DIR, use_rollup=False, start_ns=start, end_ns=end), q
-        )
+        routed = query(PromQLContext(spark, SF_DIR, use_rollup=True), q, start, end)
+        raw = query(PromQLContext(spark, SF_DIR, use_rollup=False), q, start, end)
         assert out(routed) == out(raw), q
     # and aligned bounds still take the shortcut
     assert _bounds_cell_aligned(PromQLContext(spark, SF_DIR, start_ns=start, end_ns=end - 7_000_000_000))

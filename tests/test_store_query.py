@@ -600,32 +600,38 @@ def test_store_patterns_side_channel_and_cross_flush_merge(spark, tmp_path):
     assert cat.read(spark, "patterns").count() == n_before
 
 
-def test_store_tail_poll_prunes_scan(spark, tmp_path):
-    """Each tail poll after the first threads last_seen+1 into the
-    store context, so the samples scan carries BOTH the raw-ts
-    predicate and the (oid, date) partition filters — a year-deep
-    store is never re-scanned per poll (query_range.go:670)."""
+def test_store_tail_poll_prunes_scan(spark, tmp_path, monkeypatch):
+    """Each tail poll after the first passes last_seen+1 as the query's
+    start, so the samples scan carries BOTH the raw-ts predicate and
+    the (oid, date) partition filters — a year-deep store is never
+    re-scanned per poll (query_range.go:670)."""
+    import re
+
+    from gigapipe_spark.logql import compiler
     from gigapipe_spark.streaming.ruler import Tailer
 
     cat = _seed(spark, tmp_path)
-    created = []
+    compiled = []
+    real_query = compiler.query
 
-    def factory():
-        c = store_logql_context(spark, cat)
-        created.append(c)
-        return c
+    def recording_query(*a, **kw):
+        res = real_query(*a, **kw)
+        compiled.append(res.df)
+        return res
 
-    t = Tailer(logctx_factory=factory, query='{app="web"}')
+    monkeypatch.setattr(compiler, "query", recording_query)
+    t = Tailer(
+        logctx_factory=lambda: store_logql_context(spark, cat), query='{app="web"}'
+    )
     first = t.poll()
     assert len(first) == 6 and t.last_ts_ns == T0 + 50_000_000_000
     assert t.poll() == []  # nothing new
 
-    ctx2 = created[-1]
-    assert ctx2.start_ns == t.last_ts_ns + 1
-    plan = ctx2.samples()._jdf.queryExecution().executedPlan().toString()
+    # the executed plan of the second poll: the raw-ts bound starts
+    # right after the last-seen row...
+    plan = compiled[-1]._jdf.queryExecution().executedPlan().toString()
+    assert f"GreaterThanOrEqual(timestamp_ns,{t.last_ts_ns + 1})" in plan, plan
     assert "PartitionFilters" in plan and "timestamp_ns" in plan
-    # the date partition filter is present (not an empty filter list)
-    import re
-
+    # ...and the date partition filter is present (not an empty list)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "date" in m.group(1)

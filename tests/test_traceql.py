@@ -19,6 +19,16 @@ def ctx(spark):
     return TraceQLContext(spark, SF_DIR)
 
 
+def _force_probe(monkeypatch, C, complexity):
+    """Make every complexity probe answer `complexity`: eval_complexity
+    is patched, and the session memo is emptied so no verdict cached
+    earlier stands in for the patched probe."""
+    import weakref
+
+    monkeypatch.setattr(C, "_COMPLEXITY_MEMO", weakref.WeakKeyDictionary())
+    monkeypatch.setattr(C, "eval_complexity", lambda c, spanset: complexity)
+
+
 def ids(df):
     return df.select("trace_id", "span_id")
 
@@ -282,7 +292,10 @@ def test_compare(spark):
         assert r[0]["baseline_count"] == 0
 
 
-def test_complexity_probe(spark):
+def test_complexity_probe(spark, monkeypatch):
+    import weakref
+    from dataclasses import replace
+
     from gigapipe_spark.traceql import compiler as C
 
     ctx = TraceQLContext(spark, SF_DIR)
@@ -290,21 +303,32 @@ def test_complexity_probe(spark):
     n = C.eval_complexity(ctx, script.spanset)
     # upper-bounds the matched span set, below the reference threshold here
     assert 0 < n <= C.COMPLEXITY_THRESHOLD
+    # count the probes that run (a fresh session memo, so no verdict
+    # cached by an earlier test answers in their place)
+    monkeypatch.setattr(C, "_COMPLEXITY_MEMO", weakref.WeakKeyDictionary())
+    probes = []
+    real_probe = C.eval_complexity
+
+    def counting_probe(c, spanset):
+        probes.append(spanset)
+        return real_probe(c, spanset)
+
+    monkeypatch.setattr(C, "eval_complexity", counting_probe)
     # the probe is lazy: a plain selector has no broadcast decision, so
     # compiling it runs no probe job...
     C.compile_script(ctx, script)
-    assert ctx.complexity is None
+    assert probes == []
     # ...but a plan with a forced-broadcast site (spanset agg filter)
     # probes at the first _small_side consult
     ctx2 = TraceQLContext(spark, SF_DIR)
     C.compile_script(ctx2, parse("{} | count() > 45"))
-    assert ctx2.complexity is not None
-    # a probe over the threshold flips _small_side to the AQE path
-    big = TraceQLContext(spark, SF_DIR)
-    big.complexity = C.COMPLEXITY_THRESHOLD + 1
+    assert len(probes) == 1
     df = ctx.spans().select("trace_id").limit(5)
+    hinted = C._small_side(replace(ctx, pending_spanset=script.spanset), df)
+    # a probe over the threshold flips _small_side to the AQE path
+    _force_probe(monkeypatch, C, C.COMPLEXITY_THRESHOLD + 1)
+    big = replace(TraceQLContext(spark, SF_DIR), pending_spanset=script.spanset)
     # broadcast hint applied under threshold; AQE path (no hint) above it
-    hinted = C._small_side(ctx, df)
     unhinted = C._small_side(big, df)
     assert "broadcast" in hinted._jdf.queryExecution().logical().toString().lower()
     assert "broadcast" not in unhinted._jdf.queryExecution().logical().toString().lower()
@@ -509,7 +533,7 @@ def test_stats_servability_precheck():
 
 # ------------------------------------------- structural dedup regimes (r14)
 
-def test_structural_dedup_unbounded_falls_back_to_distinct(spark):
+def test_structural_dedup_unbounded_falls_back_to_distinct(spark, monkeypatch):
     """The structural ops' dedup is regime-adaptive (_dedup_ids): with
     the complexity gate bounding the spanset, matched ids semi-join back
     onto `right` behind a broadcast probe (no exchange); when the gate
@@ -550,12 +574,12 @@ def test_structural_dedup_unbounded_falls_back_to_distinct(spark):
             """,
         ),
     ]
+    # force the probe result above the threshold: the gate refuses and
+    # every _small_side/_dedup_ids site must take the unhinted/distinct
+    # branch
+    _force_probe(monkeypatch, C, C.COMPLEXITY_THRESHOLD + 1)
     for text, sql in cases:
         c = ctx(spark)
-        # pre-set the probe result above the threshold: the gate refuses
-        # and every _small_side/_dedup_ids site must take the unhinted/
-        # distinct branch (compile_script never resets a probed value)
-        c.complexity = C.COMPLEXITY_THRESHOLD + 1
         df = ids(query(c, text, ids_only=True))
         assert_match(df, with_spans(sql), SF_DIR)
         # the unbounded dedup is distinct(): the optimized plan's root is
@@ -586,6 +610,7 @@ def test_struct_fusion_one_tagged_scan(spark, monkeypatch):
         '{ priority = "1-URGENT" } &>> { returnflag = "R" }',
         '{ priority = "1-URGENT" } !>> { returnflag = "R" }',
         '{ returnflag = "R" } <<& { priority = "1-URGENT" }',
+        '{ priority = "1-URGENT" } <<~ { returnflag = "R" }',
     ):
         fused = ids(query(ctx(spark), text, ids_only=True))
         # the optimizer inlines the flag aliases into join conditions, so
